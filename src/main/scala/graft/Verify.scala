@@ -9,10 +9,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg (dev only): comma-separated name prefixes to
-    // restrict the dump — the driver always passes exactly two
+    // restrict the dump AND the oracle/notes sidecars to the same
+    // subset, so check.py gates just that subset; with two args every
+    // entry is dumped and the sidecars are complete
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
+    def selected(name: String): Boolean = only.forall(_.exists(name.startsWith))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.GraftSession
       .configure(SparkSession.builder(), shufflePartitions = cpus.toInt)
@@ -30,7 +33,7 @@ object Verify {
     // self-describing and round-over-round diffable
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -51,7 +54,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // adjudication notes for the oracle-less entries (VERDICT r13 ask
@@ -59,7 +62,7 @@ object Verify {
     // makes the round artifact self-describing — rows-only BY DESIGN,
     // with the green b-variant that carries the correctness claim
     Files.writeString(Paths.get(s"$outDir/oracle_notes.json"),
-      SparkEntry.oracleNotes
+      SparkEntry.oracleNotes.filter { case (k, _) => selected(k) }
         .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
       failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))

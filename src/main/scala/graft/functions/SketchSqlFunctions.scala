@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, Encoders, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graftshim.GraftSqlShims
+import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.functions.{concat, lit, pmod}
 import org.apache.spark.sql.types.{Decimal, DecimalType}
 
@@ -45,8 +45,8 @@ import org.apache.spark.sql.types.{Decimal, DecimalType}
   */
 object SketchSqlFunctions {
 
-  private def toCol(e: Expression): Column = GraftSqlShims.toColumn(e)
-  private def toExpr(c: Column): Expression = GraftSqlShims.toExpression(c)
+  private def toCol(e: Expression): Column = GraftSqlBridge.toColumn(e)
+  private def toExpr(c: Column): Expression = GraftSqlBridge.toExpression(c)
 
   private def litInt(e: Expression, fn: String): Int = e match {
     case Literal(i: Int, _) => i
@@ -90,14 +90,14 @@ object SketchSqlFunctions {
     inject("kmv_sketch", classOf[KmvSketchAggregator]) { args =>
       expectArgs("kmv_sketch", args, 2)
       val k = litInt(args(1), "kmv_sketch")
-      GraftSqlShims.aggregatorExpression("kmv_sketch",
+      GraftSqlBridge.aggregatorExpression("kmv_sketch",
         new KmvSketchAggregator(k), Encoders.scalaLong, args.take(1))
     }
 
     inject("kmv_merge", classOf[KmvMergeAggregator]) { args =>
       expectArgs("kmv_merge", args, 2)
       val k = litInt(args(1), "kmv_merge")
-      GraftSqlShims.aggregatorExpression("kmv_merge",
+      GraftSqlBridge.aggregatorExpression("kmv_merge",
         new KmvMergeAggregator(k), ExpressionEncoder[Seq[Long]](), args.take(1))
     }
 

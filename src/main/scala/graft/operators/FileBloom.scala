@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftSqlShims
+import org.apache.spark.sql.graft.GraftSqlBridge
 
 /** File-level BLOOM FILTER index for point probes on UNCLUSTERED
   * high-cardinality columns — the fourth member of the file-skipping
@@ -71,7 +71,7 @@ object FileBloom {
     */
   def positionsOf(key: Column, m: Int, k: Int): Seq[Int] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val e = GraftSqlShims.toExpression(key)
+    val e = GraftSqlBridge.toExpression(key)
     require(e.isInstanceOf[Literal], s"bloom probe key must be a literal, got $e")
     val a0 = XxHash64(Seq(e), 42L).eval().asInstanceOf[Long]
     val b0 = XxHash64(Seq(e, Literal(Salt)), 42L).eval().asInstanceOf[Long]
@@ -240,7 +240,7 @@ object FileBloom {
     // own type), so the mismatch must fail loudly here instead
     val colType = spark.read.parquet(tablePath).schema(column).dataType
     keys.foreach { key =>
-      val e = GraftSqlShims.toExpression(key)
+      val e = GraftSqlBridge.toExpression(key)
       require(e.dataType == colType,
         s"bloom probe key $e has type ${e.dataType}, but column '$column' " +
           s"is $colType — hashes would not match; cast the key literal")

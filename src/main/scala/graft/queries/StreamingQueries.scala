@@ -1,7 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SQLContext, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.reference.SpikeParams
 import graft.streaming.{HistRow, StreamingDetect, StreamingSpike}
 
@@ -39,8 +42,8 @@ object StreamingQueries {
     * count never affects WHAT a stateful operator emits, only where
     * each key's state lives). A production deployment sizes this to
     * keys/partition, exactly like batch shuffle sizing.
-    */
-  /** @param noDataBatches keep Spark's no-data micro-batches ON for
+    *
+    * @param noDataBatches keep Spark's no-data micro-batches ON for
     *   entries whose protocol depends on watermark-driven state action
     *   BETWEEN data batches: st05's TTL dedup re-sends old keys in the
     *   very next data batch and needs the eviction to have happened
@@ -79,6 +82,59 @@ object StreamingQueries {
 
   private val StreamPartitions = 8
 
+  /** The feed protocol every MemoryStream entry shares: create the
+    * stream, start `query` over it inside [[withShufflePartitions]],
+    * run the batches in order — each adds one micro-batch's data and
+    * is followed by exactly one processAllAvailable() — and stop the
+    * query in `finally`, whether a batch throws or not.
+    */
+  private[queries] def feed[A: Encoder](s: SparkSession, noDataBatches: Boolean = false)(
+      query: MemoryStream[A] => StreamingQuery)(batches: (MemoryStream[A] => Unit)*): Unit = {
+    implicit val ctx: SQLContext = s.sqlContext
+    drive(s, MemoryStream[A], noDataBatches)(query, batches)
+  }
+
+  /** [[feed]] over two streams of one row type; each batch may add to
+    * both before the one processAllAvailable().
+    */
+  private def feedPair[A: Encoder](s: SparkSession)(
+      query: (MemoryStream[A], MemoryStream[A]) => StreamingQuery)(
+      batches: ((MemoryStream[A], MemoryStream[A]) => Unit)*): Unit = {
+    implicit val ctx: SQLContext = s.sqlContext
+    drive(s, (MemoryStream[A], MemoryStream[A]), noDataBatches = false)(
+      query.tupled, batches.map(_.tupled))
+  }
+
+  private def drive[S](s: SparkSession, in: S, noDataBatches: Boolean)(
+      query: S => StreamingQuery, batches: Seq[S => Unit]): Unit =
+    withShufflePartitions(s, StreamPartitions, noDataBatches) {
+      val q = query(in)
+      try batches.foreach { b => b(in); q.processAllAvailable() }
+      finally q.stop()
+    }
+
+  /** One feed batch per element of `data`, in order. */
+  private def addEach[A](data: Seq[Seq[A]]): Seq[MemoryStream[A] => Unit] =
+    data.map(b => (in: MemoryStream[A]) => { in.addData(b); () })
+
+  /** Starts `ds` into the in-memory table `name`; the entry reads it
+    * back with `s.table(name)` once the feed has run.
+    */
+  private[queries] def memorySink(ds: Dataset[_], name: String,
+                                  mode: String = "append"): StreamingQuery =
+    ds.writeStream.format("memory").queryName(name).outputMode(mode).start()
+
+  /** Starts `df` into a foreachBatch sink that runs `f` on every
+    * micro-batch.
+    */
+  private def eachBatch(df: DataFrame)(f: DataFrame => Unit): StreamingQuery =
+    df.writeStream.foreachBatch((batch: DataFrame, _: Long) => f(batch)).start()
+
+  /** [[eachBatch]] appending each micro-batch's rows from `f` to `buf`. */
+  private def collectInto[T](df: DataFrame, buf: mutable.Buffer[T])(
+      f: DataFrame => IterableOnce[T]): StreamingQuery =
+    eachBatch(df)(batch => buf.synchronized { buf ++= f(batch) })
+
   /** Tumbling window width for st01 (1 day — the events table spans
     * weeks, so every key sees a sequence of windows).
     */
@@ -87,7 +143,6 @@ object StreamingQueries {
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st01_streaming_spikes" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       // fixture rows memoized per (shape, sf): deterministic batch
       // derivation, so bench iterations 2..n feed identical data
@@ -101,21 +156,12 @@ object StreamingQueries {
       // window; its own window never closes → never emitted
       val sentinel = HistRow(t + 10 * WindowSec, 0L, -1, 0L, -1, -1L)
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[HistRow]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = StreamingDetect.detect(in.toDF(), WindowSec, watermarkDelaySec = 0L,
-            params = P)
-          .writeStream.format("memory").queryName("st01_alerts")
-          .outputMode("append").start()
-        try {
-          in.addData(rows) // batch 1: ingest everything, watermark 0
-          q.processAllAvailable()
-          in.addData(sentinel) // batch 2: watermark=tmax, closes all but last windows
-          q.processAllAvailable()
-          in.addData(sentinel) // batch 3: watermark=tmax+10W, closes the last windows
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      feed[HistRow](s)(in => memorySink(
+          StreamingDetect.detect(in.toDF(), WindowSec, watermarkDelaySec = 0L, params = P),
+          "st01_alerts"))(
+        _.addData(rows),     // batch 1: ingest everything, watermark 0
+        _.addData(sentinel), // batch 2: watermark=tmax, closes all but last windows
+        _.addData(sentinel)) // batch 3: watermark=tmax+10W, closes the last windows
 
       s.table("st01_alerts")
         .orderBy("num_protocol", "type_proto", "dst_ip", "window_start")
@@ -130,7 +176,6 @@ object StreamingQueries {
     // finalizes; the sentinel's own window never closes → invisible.
     "st02_streaming_window_agg" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val (t, rows) = graft.core.Scratch.cachedValue(s"st_hist_$d") {
         val t0 = RefHistogram.tmax(s, d)
@@ -139,21 +184,10 @@ object StreamingQueries {
       }
       val sentinel = HistRow(t + 10 * WindowSec, 0L, -1, 0L, -1, -1L)
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[HistRow]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = StreamingSpike.windowedAggregate(in.toDF(), WindowSec,
-            watermarkDelaySec = 0L)
-          .writeStream.format("memory").queryName("st02_windows")
-          .outputMode("append").start()
-        try {
-          in.addData(rows)
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      feed[HistRow](s)(in => memorySink(
+          StreamingSpike.windowedAggregate(in.toDF(), WindowSec, watermarkDelaySec = 0L),
+          "st02_windows"))(
+        _.addData(rows), _.addData(sentinel), _.addData(sentinel))
 
       s.table("st02_windows")
         .orderBy("num_protocol", "type_proto", "dst_ip", "window_start")
@@ -169,7 +203,6 @@ object StreamingQueries {
     // unbounded-retention dedup means.
     "st03_streaming_dedup" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val hashes = graft.core.Scratch.cachedValue(s"st03_fixture_$d") {
         Tables.documents(s, d)
@@ -177,22 +210,13 @@ object StreamingQueries {
           .as[Long].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().select(col("value").as("content_h"))
-          .dropDuplicates("content_h")
-          .writeStream.format("memory").queryName("st03_kept")
-          .outputMode("append").start()
-        try {
-          // two batches with an overlapping split: cross-batch dups must
-          // be suppressed by state, not just within-batch aggregation
-          val (a, b) = hashes.splitAt(hashes.length / 2)
-          in.addData(a)
-          q.processAllAvailable()
-          in.addData(b ++ a.take(10))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      // two batches with an overlapping split: cross-batch dups must
+      // be suppressed by state, not just within-batch aggregation
+      val (a, b) = hashes.splitAt(hashes.length / 2)
+      feed[Long](s)(in => memorySink(
+          in.toDF().select(col("value").as("content_h")).dropDuplicates("content_h"),
+          "st03_kept"))(
+        _.addData(a), _.addData(b ++ a.take(10)))
 
       s.table("st03_kept").orderBy("content_h")
     }),
@@ -208,7 +232,6 @@ object StreamingQueries {
     // whole-batch oracle verbatim.
     "st04_streaming_incremental_dedup" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.llm.Dedup
 
       val docs = Tables.documents(s, d).select("doc_id", "text")
@@ -226,34 +249,16 @@ object StreamingQueries {
           .as[(Long, String)].collect().toSeq
       }
 
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+      val buf = mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
+      val (a, b) = newDocs.partition(_._1 % 20 == 0)
       // stateless stream (foreachBatch), but the batch joins INSIDE the
-      // sink run with the session's shuffle partitions — size them to
-      // the micro-batch, not the 32-way batch default
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            buf.synchronized {
-              buf ++= Dedup.incrementalCandidates(batch, index, "text", "doc_id")
-                .collect()
-                .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-            }
-            ()
-          }
-          .start()
-        try {
-          val (a, b) = newDocs.partition(_._1 % 20 == 0)
-          in.addData(a)
-          q.processAllAvailable()
-          in.addData(b)
-          q.processAllAvailable()
-        } finally {
-          q.stop()
-          index.unpersist()
-        }
-      }
+      // sink run with the session's shuffle partitions — the feed's
+      // scope sizes them to the micro-batch, not the 32-way default
+      try feed[(Long, String)](s)(in => collectInto(in.toDF().toDF("doc_id", "text"), buf)(
+          batch => Dedup.incrementalCandidates(batch, index, "text", "doc_id").collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))))(
+        _.addData(a), _.addData(b))
+      finally index.unpersist()
 
       buf.toSeq.toDF("new_id", "old_id", "n_match", "est_jaccard_e6")
         .orderBy("new_id", "old_id")
@@ -274,7 +279,6 @@ object StreamingQueries {
     // generation) carries exactly one distinct timestamp.
     "st05_streaming_dedup_ttl" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val (t0, keys) = graft.core.Scratch.cachedValue(s"st05_fixture_$d") {
         (RefHistogram.tmax(s, d),
@@ -286,24 +290,16 @@ object StreamingQueries {
         keys.map(k => (k, t0 + k + offsetSec))
       val sentinel = (-1L, t0 + 5L * 86400L)
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      withShufflePartitions(s, StreamPartitions, noDataBatches = true) {
-        val q = in.toDF().toDF("k", "sec")
-          .select(col("k"), timestamp_seconds(col("sec")).as("ts"))
-          .withWatermark("ts", "2 days")
-          .dropDuplicatesWithinWatermark("k")
-          .select(col("k"), unix_timestamp(col("ts")).as("sec"))
-          .writeStream.format("memory").queryName("st05_kept")
-          .outputMode("append").start()
-        try {
-          in.addData(gen(0L) ++ gen(0L).take(10)) // batch 1 + in-batch dups (dropped)
-          q.processAllAvailable()
-          in.addData(sentinel) // watermark -> t0+5d: every entry expires (ttl 2d)
-          q.processAllAvailable()
-          in.addData(gen(10L * 86400L)) // same keys, next generation: kept
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      feed[(Long, Long)](s, noDataBatches = true)(in => memorySink(
+          in.toDF().toDF("k", "sec")
+            .select(col("k"), timestamp_seconds(col("sec")).as("ts"))
+            .withWatermark("ts", "2 days")
+            .dropDuplicatesWithinWatermark("k")
+            .select(col("k"), unix_timestamp(col("ts")).as("sec")),
+          "st05_kept"))(
+        _.addData(gen(0L) ++ gen(0L).take(10)), // batch 1 + in-batch dups (dropped)
+        _.addData(sentinel), // watermark -> t0+5d: every entry expires (ttl 2d)
+        _.addData(gen(10L * 86400L))) // same keys, next generation: kept
 
       s.table("st05_kept").filter(col("k") >= 0).orderBy("k", "sec")
     }),
@@ -319,7 +315,6 @@ object StreamingQueries {
     // arrive; batching cannot change the match set.
     "st06_stream_stream_join" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val ev = graft.core.Scratch.cachedValue(s"st_ev_uid_fixture_$d") {
         Tables.events(s, d)
@@ -328,9 +323,11 @@ object StreamingQueries {
       }
       val (evens, odds) = ev.partition(_._1 % 2 == 0)
 
-      val inL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      val inR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
+      // two batches per side with a cross-batch split: matches
+      // whose halves arrive in different batches must still pair
+      val (l1, l2) = evens.partition(_._1 % 4 == 0)
+      val (r1, r2) = odds.partition(_._1 % 4 == 1)
+      feedPair[(Long, Long, Long)](s) { (inL, inR) =>
         // the delay exceeds the feed's event-time span so no batch-2
         // row is ever "late" (the engine drops late stream-stream
         // inputs): state holds the full horizon here, which IS the
@@ -342,24 +339,14 @@ object StreamingQueries {
         val r = inR.toDF().toDF("r_event", "r_user", "r_sec")
           .withColumn("r_ts", timestamp_seconds(col("r_sec")))
           .withWatermark("r_ts", "400 days")
-        val q = l.join(r,
+        memorySink(l.join(r,
             col("user_id") === col("r_user") &&
               col("r_ts") > col("l_ts") &&
               col("r_ts") <= col("l_ts") + expr("INTERVAL 1 HOUR"))
-          .select("l_event", "r_event", "user_id", "l_sec", "r_sec")
-          .writeStream.format("memory").queryName("st06_matches")
-          .outputMode("append").start()
-        try {
-          // two batches per side with a cross-batch split: matches
-          // whose halves arrive in different batches must still pair
-          val (l1, l2) = evens.partition(_._1 % 4 == 0)
-          val (r1, r2) = odds.partition(_._1 % 4 == 1)
-          inL.addData(l1); inR.addData(r1)
-          q.processAllAvailable()
-          inL.addData(l2); inR.addData(r2)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+          .select("l_event", "r_event", "user_id", "l_sec", "r_sec"), "st06_matches")
+      }(
+        (inL, inR) => { inL.addData(l1); inR.addData(r1) },
+        (inL, inR) => { inL.addData(l2); inR.addData(r2) })
 
       s.table("st06_matches").orderBy("l_event", "r_event")
     }),
@@ -377,7 +364,6 @@ object StreamingQueries {
     // size = open sessions, not events.
     "st07_session_window" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val rows = graft.core.Scratch.cachedValue(s"st_uid_sec_fixture_$d") {
         Tables.events(s, d)
@@ -387,28 +373,20 @@ object StreamingQueries {
       val tmax = rows.map(_._2).max
       val sentinel = (-1L, tmax + 100L * SessionGapSec)
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("user_id", "sec")
-          .select(col("user_id"), timestamp_seconds(col("sec")).as("ts"))
-          .withWatermark("ts", "0 seconds")
-          .groupBy(session_window(col("ts"), s"$SessionGapSec seconds"), col("user_id"))
-          .agg(count(lit(1)).as("n_events"))
-          .select(col("user_id"),
-            unix_timestamp(col("session_window.start")).as("start_sec"),
-            unix_timestamp(col("session_window.end")).as("end_sec"),
-            col("n_events"))
-          .writeStream.format("memory").queryName("st07_sessions")
-          .outputMode("append").start()
-        try {
-          in.addData(rows) // batch 1: everything, watermark 0
-          q.processAllAvailable()
-          in.addData(sentinel) // advance watermark past every session end
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      feed[(Long, Long)](s)(in => memorySink(
+          in.toDF().toDF("user_id", "sec")
+            .select(col("user_id"), timestamp_seconds(col("sec")).as("ts"))
+            .withWatermark("ts", "0 seconds")
+            .groupBy(session_window(col("ts"), s"$SessionGapSec seconds"), col("user_id"))
+            .agg(count(lit(1)).as("n_events"))
+            .select(col("user_id"),
+              unix_timestamp(col("session_window.start")).as("start_sec"),
+              unix_timestamp(col("session_window.end")).as("end_sec"),
+              col("n_events")),
+          "st07_sessions"))(
+        _.addData(rows),     // batch 1: everything, watermark 0
+        _.addData(sentinel), // advance watermark past every session end
+        _.addData(sentinel))
 
       s.table("st07_sessions").filter(col("user_id") >= 0)
         .orderBy("user_id", "start_sec")
@@ -425,7 +403,6 @@ object StreamingQueries {
     // batching cannot change the oracle.
     "st08_streaming_complete_agg" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val rows = graft.core.Scratch.cachedValue(s"st_type_valc_fixture_$d") {
         Tables.events(s, d)
@@ -434,22 +411,15 @@ object StreamingQueries {
           .as[(String, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("event_type", "value_c")
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum("value_c").as("sum_value_c"))
-          .writeStream.format("memory").queryName("st08_totals")
-          .outputMode("complete").start()
-        try {
-          // three uneven batches: totals must accumulate across them
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+      // three uneven batches: totals must accumulate across them
+      val (a, rest) = rows.splitAt(rows.length / 3)
+      val (b, c) = rest.splitAt(rest.length / 2)
+      feed[(String, Long)](s)(in => memorySink(
+          in.toDF().toDF("event_type", "value_c")
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n"), sum("value_c").as("sum_value_c")),
+          "st08_totals", "complete"))(
+        _.addData(a), _.addData(b), _.addData(c))
 
       s.table("st08_totals").orderBy("event_type")
     }),
@@ -463,7 +433,6 @@ object StreamingQueries {
     // production. The match set is batching-invariant by construction.
     "st09_stream_static_join" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val dim = Tables.orders(s, d)
         .groupBy(col("o_custkey").as("user_id"))
@@ -474,18 +443,11 @@ object StreamingQueries {
           .as[(Long, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("event_id", "user_id")
-          .join(broadcast(dim), "user_id")
-          .writeStream.format("memory").queryName("st09_enriched")
-          .outputMode("append").start()
-        try {
-          val (a, b) = rows.partition(_._1 % 2 == 0)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val (a, b) = rows.partition(_._1 % 2 == 0)
+      feed[(Long, Long)](s)(in => memorySink(
+          in.toDF().toDF("event_id", "user_id").join(broadcast(dim), "user_id"),
+          "st09_enriched"))(
+        _.addData(a), _.addData(b))
 
       s.table("st09_enriched")
         .select(col("event_id"), col("user_id"), col("n_orders"))
@@ -502,7 +464,6 @@ object StreamingQueries {
     // explicit operator state instead of the engine's.
     "st10_transform_with_state" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
       val rows = graft.core.Scratch.cachedValue(s"st_type_valc_fixture_$d") {
@@ -517,22 +478,16 @@ object StreamingQueries {
       val prevProvider = s.conf.getOption(providerKey)
       s.conf.set(providerKey,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, Boolean)]
-      try withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDS()
-          .groupByKey(_._1)
-          .transformWithState(new graft.streaming.RunningTotalsProcessor,
-            TimeMode.None(), OutputMode.Append())
-          .toDF("event_type", "n", "sum_value_c")
-          .writeStream.format("memory").queryName("st10_totals")
-          .outputMode("append").start()
-        try {
-          in.addData(rows.map { case (k, v) => (k, v, false) })
-          q.processAllAvailable()
-          in.addData(keys.map(k => (k, 0L, true)))
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally {
+      try feed[(String, Long, Boolean)](s)(in => memorySink(
+          in.toDS()
+            .groupByKey(_._1)
+            .transformWithState(new graft.streaming.RunningTotalsProcessor,
+              TimeMode.None(), OutputMode.Append())
+            .toDF("event_type", "n", "sum_value_c"),
+          "st10_totals"))(
+        _.addData(rows.map { case (k, v) => (k, v, false) }),
+        _.addData(keys.map(k => (k, 0L, true))))
+      finally {
         prevProvider.fold(s.conf.unset(providerKey))(v => s.conf.set(providerKey, v))
       }
 
@@ -548,7 +503,6 @@ object StreamingQueries {
     // makes a SECOND run incremental (FileStreamSpec proves that
     // half — one run is enough for the oracle).
     "st11_file_stream_agg" -> ((s, d) => {
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import org.apache.spark.sql.streaming.Trigger
 
       withShufflePartitions(s, StreamPartitions) {
@@ -595,7 +549,6 @@ object StreamingQueries {
     // so two batches emit exactly the one-shot answer.
     "st12_streaming_winnowing" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.llm.Dedup
 
       val docs = Tables.documents(s, d).select("doc_id", "text")
@@ -615,31 +568,13 @@ object StreamingQueries {
           .as[(Long, String)].collect().toSeq
       }
 
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            buf.synchronized {
-              buf ++= Dedup.incrementalWinnowing(batch, index, "text", "doc_id")
-                .collect()
-                .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-            }
-            ()
-          }
-          .start()
-        try {
-          val (a, b) = newDocs.partition(_._1 % 20 == 0)
-          in.addData(a)
-          q.processAllAvailable()
-          in.addData(b)
-          q.processAllAvailable()
-        } finally {
-          q.stop()
-          index.unpersist()
-        }
-      }
+      val buf = mutable.ArrayBuffer.empty[(Long, Long, Long)]
+      val (a, b) = newDocs.partition(_._1 % 20 == 0)
+      try feed[(Long, String)](s)(in => collectInto(in.toDF().toDF("doc_id", "text"), buf)(
+          batch => Dedup.incrementalWinnowing(batch, index, "text", "doc_id").collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))))(
+        _.addData(a), _.addData(b))
+      finally index.unpersist()
 
       buf.toSeq.toDF("new_id", "old_id", "n_shared")
         .orderBy("new_id", "old_id")
@@ -659,7 +594,6 @@ object StreamingQueries {
     // heavy-hitter table.
     "st13_streaming_heavy_hitters" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       val mgK = 30
       def toks = Tables.documents(s, d)
         .select(explode(graft.llm.TextFunctions.tokens(col("text"))).as("w"))
@@ -667,19 +601,11 @@ object StreamingQueries {
         toks.as[String].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
-      withShufflePartitions(s, StreamPartitions) {
-        val mg = udaf(new graft.functions.MisraGriesAggregator(mgK))
-        val q = in.toDF().toDF("w")
-          .agg(count(lit(1)).as("n_total"), mg(col("w")).as("cands"))
-          .writeStream.format("memory").queryName("st13_sketch")
-          .outputMode("complete").start()
-        try {
-          fed.grouped(fed.size / 3 + 1).foreach { b =>
-            in.addData(b); q.processAllAvailable()
-          }
-        } finally q.stop()
-      }
+      val mg = udaf(new graft.functions.MisraGriesAggregator(mgK))
+      feed[String](s)(in => memorySink(
+          in.toDF().toDF("w").agg(count(lit(1)).as("n_total"), mg(col("w")).as("cands")),
+          "st13_sketch", "complete"))(
+        addEach(fed.grouped(fed.size / 3 + 1).toSeq): _*)
 
       val cand = s.table("st13_sketch")
         .select(col("n_total"), explode(col("cands")).as("w"))
@@ -701,7 +627,6 @@ object StreamingQueries {
     // semantics — an event AT the current end still merges).
     "st14_dynamic_session_window" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val rows = graft.core.Scratch.cachedValue(s"st_uid_sec_type_fixture_$d") {
         Tables.events(s, d)
@@ -711,31 +636,23 @@ object StreamingQueries {
       val tmax = rows.map(_._2).max
       val sentinel = (-1L, tmax + 100L * 7200L, "view")
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val gap = when(col("event_type") === "purchase", lit("7200 seconds"))
-          .otherwise(lit("1800 seconds"))
-        val q = in.toDF().toDF("user_id", "sec", "event_type")
-          .select(col("user_id"), timestamp_seconds(col("sec")).as("ts"),
-            col("event_type"))
-          .withWatermark("ts", "0 seconds")
-          .groupBy(session_window(col("ts"), gap), col("user_id"))
-          .agg(count(lit(1)).as("n_events"))
-          .select(col("user_id"),
-            unix_timestamp(col("session_window.start")).as("start_sec"),
-            unix_timestamp(col("session_window.end")).as("end_sec"),
-            col("n_events"))
-          .writeStream.format("memory").queryName("st14_sessions")
-          .outputMode("append").start()
-        try {
-          in.addData(rows) // batch 1: everything, watermark 0
-          q.processAllAvailable()
-          in.addData(sentinel) // advance watermark past every session end
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val gap = when(col("event_type") === "purchase", lit("7200 seconds"))
+        .otherwise(lit("1800 seconds"))
+      feed[(Long, Long, String)](s)(in => memorySink(
+          in.toDF().toDF("user_id", "sec", "event_type")
+            .select(col("user_id"), timestamp_seconds(col("sec")).as("ts"),
+              col("event_type"))
+            .withWatermark("ts", "0 seconds")
+            .groupBy(session_window(col("ts"), gap), col("user_id"))
+            .agg(count(lit(1)).as("n_events"))
+            .select(col("user_id"),
+              unix_timestamp(col("session_window.start")).as("start_sec"),
+              unix_timestamp(col("session_window.end")).as("end_sec"),
+              col("n_events")),
+          "st14_sessions"))(
+        _.addData(rows),     // batch 1: everything, watermark 0
+        _.addData(sentinel), // advance watermark past every session end
+        _.addData(sentinel))
 
       s.table("st14_sessions").filter(col("user_id") >= 0)
         .orderBy("user_id", "start_sec")
@@ -754,7 +671,6 @@ object StreamingQueries {
     // negative ids and are filtered from the result.
     "st15_stream_stream_left_outer" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val ev = graft.core.Scratch.cachedValue(s"st_ev_uid_fixture_$d") {
         Tables.events(s, d)
@@ -766,9 +682,7 @@ object StreamingQueries {
       val sentinelL = (-2L, -1L, tmax + 100L * 3600L)
       val sentinelR = (-3L, -1L, tmax + 100L * 3600L)
 
-      val inL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      val inR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
+      feedPair[(Long, Long, Long)](s) { (inL, inR) =>
         // small delay: all real rows arrive in batch 1 (watermark
         // still at its initial floor, nothing is late); the sentinel
         // batch then jumps the watermark past max(l_ts)+1h, closing
@@ -779,23 +693,16 @@ object StreamingQueries {
         val r = inR.toDF().toDF("r_event", "r_user", "r_sec")
           .withColumn("r_ts", timestamp_seconds(col("r_sec")))
           .withWatermark("r_ts", "10 seconds")
-        val q = l.join(r,
+        memorySink(l.join(r,
             col("user_id") === col("r_user") &&
               col("r_ts") > col("l_ts") &&
               col("r_ts") <= col("l_ts") + expr("INTERVAL 1 HOUR"),
             "left_outer")
-          .select("l_event", "user_id", "l_sec", "r_event", "r_sec")
-          .writeStream.format("memory").queryName("st15_matches")
-          .outputMode("append").start()
-        try {
-          inL.addData(evens); inR.addData(odds)
-          q.processAllAvailable()
-          inL.addData(sentinelL); inR.addData(sentinelR)
-          q.processAllAvailable()
-          inL.addData(sentinelL); inR.addData(sentinelR)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+          .select("l_event", "user_id", "l_sec", "r_event", "r_sec"), "st15_matches")
+      }(
+        (inL, inR) => { inL.addData(evens); inR.addData(odds) },
+        (inL, inR) => { inL.addData(sentinelL); inR.addData(sentinelR) },
+        (inL, inR) => { inL.addData(sentinelL); inR.addData(sentinelR) })
 
       s.table("st15_matches").filter(col("l_event") >= 0)
         .orderBy("l_event", "r_event")
@@ -813,7 +720,6 @@ object StreamingQueries {
     // metrics-rollup topology (raw → 5min → 1h) as one plan.
     "st16_chained_window_agg" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val rows = graft.core.Scratch.cachedValue(s"st_uid_sec_type_fixture_$d") {
         Tables.events(s, d)
@@ -823,28 +729,18 @@ object StreamingQueries {
       val tmax = rows.map(_._2).max
       val sentinel = (-1L, tmax + 100L * 3600L, "view")
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("user_id", "sec", "event_type")
-          .select(timestamp_seconds(col("sec")).as("ts"), col("event_type"))
-          .withWatermark("ts", "0 seconds")
-          .groupBy(window(col("ts"), "300 seconds"), col("event_type"))
-          .agg(count(lit(1)).as("n5"))
-          .groupBy(window(col("window"), "3600 seconds"), col("event_type"))
-          .agg(sum("n5").as("n"), max("n5").as("peak5"))
-          .select(unix_timestamp(col("window.start")).as("hour_start"),
-            col("event_type"), col("n"), col("peak5"))
-          .writeStream.format("memory").queryName("st16_rollup")
-          .outputMode("append").start()
-        try {
-          in.addData(rows)
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      feed[(Long, Long, String)](s)(in => memorySink(
+          in.toDF().toDF("user_id", "sec", "event_type")
+            .select(timestamp_seconds(col("sec")).as("ts"), col("event_type"))
+            .withWatermark("ts", "0 seconds")
+            .groupBy(window(col("ts"), "300 seconds"), col("event_type"))
+            .agg(count(lit(1)).as("n5"))
+            .groupBy(window(col("window"), "3600 seconds"), col("event_type"))
+            .agg(sum("n5").as("n"), max("n5").as("peak5"))
+            .select(unix_timestamp(col("window.start")).as("hour_start"),
+              col("event_type"), col("n"), col("peak5")),
+          "st16_rollup"))(
+        _.addData(rows), _.addData(sentinel), _.addData(sentinel))
 
       // the sentinel's own (still-open) windows never emit; guard by
       // horizon anyway so a re-run against drifted data stays exact
@@ -865,7 +761,6 @@ object StreamingQueries {
     // sink (IdempotentSink) — the fold itself is what's under test.
     "st17_streaming_cdc_merge" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.operators.SnapshotMerge
 
       val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
@@ -887,18 +782,11 @@ object StreamingQueries {
       // eager localCheckpoint per fold: the next batch's merge reads a
       // MATERIALIZED snapshot, not a growing lineage of window passes
       @volatile var snap = base.localCheckpoint(true)
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("o_orderkey", "o_custkey", "price_c", "ver", "op")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            snap = SnapshotMerge(snap, batch, Seq("o_orderkey"), "ver", "op")
-              .localCheckpoint(true)
-          }
-          .start()
-        try batches.foreach { b => in.addData(b); q.processAllAvailable() }
-        finally q.stop()
-      }
+      feed[(Long, Long, Long, Long, String)](s)(in => eachBatch(
+          in.toDF().toDF("o_orderkey", "o_custkey", "price_c", "ver", "op")) { batch =>
+        snap = SnapshotMerge(snap, batch, Seq("o_orderkey"), "ver", "op")
+          .localCheckpoint(true)
+      })(addEach(batches): _*)
       snap.orderBy("o_orderkey")
     }),
 
@@ -913,7 +801,6 @@ object StreamingQueries {
     // batching-invariant, and x69's oracle is reused unchanged.
     "st18_streaming_source_quota" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       implicit val enc: org.apache.spark.sql.Encoder[graft.functions.Scored] =
         org.apache.spark.sql.Encoders.product[graft.functions.Scored]
       val topk = udaf(new graft.functions.TopKAggregator(50))
@@ -922,23 +809,17 @@ object StreamingQueries {
         Tables.documents(s, d).select(col("doc_id"), col("source"))
           .as[(Long, String)].collect().toSeq
       }
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "source")
-          .select(col("source"),
-            graft.llm.TextFunctions.hash60(
-              concat(lit("quota:"), col("doc_id").cast("string"))).as("score"),
-            col("doc_id").as("id"))
-          .groupBy("source")
-          .agg(topk(col("score"), col("id")).as("kept"))
-          .writeStream.format("memory").queryName("st18_quota")
-          .outputMode("complete").start()
-        try {
-          val (b1, b2) = rows.splitAt(rows.size / 2)
-          in.addData(b1); q.processAllAvailable()
-          in.addData(b2); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val (b1, b2) = rows.splitAt(rows.size / 2)
+      feed[(Long, String)](s)(in => memorySink(
+          in.toDF().toDF("doc_id", "source")
+            .select(col("source"),
+              graft.llm.TextFunctions.hash60(
+                concat(lit("quota:"), col("doc_id").cast("string"))).as("score"),
+              col("doc_id").as("id"))
+            .groupBy("source")
+            .agg(topk(col("score"), col("id")).as("kept")),
+          "st18_quota", "complete"))(
+        _.addData(b1), _.addData(b2))
       s.table("st18_quota")
         .select(col("source"), posexplode(col("kept")).as(Seq("pos", "t")))
         .select(col("source"), col("t.id").as("doc_id"),
@@ -960,7 +841,6 @@ object StreamingQueries {
     // DuckDB) since the estimate itself has no cross-engine oracle.
     "st19_streaming_sketch_distinct" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val rows = graft.core.Scratch.cachedValue(s"st_type_uid_fixture_$d") {
         Tables.events(s, d)
@@ -968,24 +848,17 @@ object StreamingQueries {
           .as[(String, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("event_type", "user_id")
-          .groupBy("event_type")
-          .agg(hll_sketch_agg(col("user_id"), 12).as("sk"),
-            count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName("st19_uniques")
-          .outputMode("complete").start()
-        try {
-          // three uneven batches: the sketch state must merge across
-          // them into the same set-function a single batch would give
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+      // three uneven batches: the sketch state must merge across
+      // them into the same set-function a single batch would give
+      val (a, rest) = rows.splitAt(rows.length / 3)
+      val (b, c) = rest.splitAt(rest.length / 2)
+      feed[(String, Long)](s)(in => memorySink(
+          in.toDF().toDF("event_type", "user_id")
+            .groupBy("event_type")
+            .agg(hll_sketch_agg(col("user_id"), 12).as("sk"),
+              count(lit(1)).as("n")),
+          "st19_uniques", "complete"))(
+        _.addData(a), _.addData(b), _.addData(c))
 
       val exact = graft.core.Scratch.cachedFrame(s, s"st19_exact_$d") {
         Tables.events(s, d).groupBy("event_type")
@@ -1010,7 +883,6 @@ object StreamingQueries {
     // q56 applies; batching cannot change the oracle.
     "st20_streaming_ddsketch" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       val Gamma = 1.04
       val QsE6 = Seq(500000L, 950000L, 990000L)
 
@@ -1021,21 +893,14 @@ object StreamingQueries {
           .as[(String, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = graft.operators.DdSketch.sketch(
+      val (a, rest) = rows.splitAt(rows.length / 3)
+      val (b, c) = rest.splitAt(rest.length / 2)
+      feed[(String, Long)](s)(in => memorySink(
+          graft.operators.DdSketch.sketch(
             in.toDF().toDF("event_type", "value_c"),
-            Seq("event_type"), "value_c", Gamma)
-          .writeStream.format("memory").queryName("st20_sketch")
-          .outputMode("complete").start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+            Seq("event_type"), "value_c", Gamma),
+          "st20_sketch", "complete"))(
+        _.addData(a), _.addData(b), _.addData(c))
 
       val est = graft.operators.DdSketch.quantiles(
           s.table("st20_sketch"), Seq("event_type"), QsE6)
@@ -1074,7 +939,6 @@ object StreamingQueries {
     // the exact-side join (left join + coalesce 0 — ADVICE r8).
     "st21_streaming_theta_overlap" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.functions.KmvSketch._
       val K = 256
       val kmv = udaf(new graft.functions.KmvSketchAggregator(K))
@@ -1087,22 +951,15 @@ object StreamingQueries {
           .as[(String, String)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("event_type", "ud")
-          .select(col("event_type"), hash63(col("ud")).as("h"))
-          .groupBy("event_type")
-          .agg(kmv(col("h")).as("sk"), count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName("st21_theta")
-          .outputMode("complete").start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val (a, rest) = rows.splitAt(rows.length / 3)
+      val (b, c) = rest.splitAt(rest.length / 2)
+      feed[(String, String)](s)(in => memorySink(
+          in.toDF().toDF("event_type", "ud")
+            .select(col("event_type"), hash63(col("ud")).as("h"))
+            .groupBy("event_type")
+            .agg(kmv(col("h")).as("sk"), count(lit(1)).as("n")),
+          "st21_theta", "complete"))(
+        _.addData(a), _.addData(b), _.addData(c))
 
       def ud = Tables.events(s, d)
         .select(col("event_type"), col("user_id"), dayCol.as("day"))
@@ -1159,7 +1016,6 @@ object StreamingQueries {
     // the harness cost (the oracle filters the same slice).
     "st22_streaming_cm_join_estimate" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.operators.CmSketch
       val W = 16384L
 
@@ -1168,19 +1024,12 @@ object StreamingQueries {
           .filter(col("l_orderkey") % 4 === 0)
           .as[Long].collect().toSeq
       }
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = CmSketch.sketch(in.toDF().toDF("k"), col("k"), "cnt_a", w = W)
-          .writeStream.format("memory").queryName("st22_cm")
-          .outputMode("complete").start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val (a, rest) = rows.splitAt(rows.length / 3)
+      val (b, c) = rest.splitAt(rest.length / 2)
+      feed[Long](s)(in => memorySink(
+          CmSketch.sketch(in.toDF().toDF("k"), col("k"), "cnt_a", w = W),
+          "st22_cm", "complete"))(
+        _.addData(a), _.addData(b), _.addData(c))
       // comparison fixtures memoized per sf: the static dim sketch and
       // the exact join count are deterministic batch frames the entry
       // only COMPARES against — the streamed sketch is what the entry
@@ -1220,7 +1069,6 @@ object StreamingQueries {
     // (month_sec = −1) engages the estimator under its 4σ bound.
     "st23_streaming_sketch_index" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.functions.KmvSketch._
       val K = 256
       val kmvMerge = udaf(new graft.functions.KmvMergeAggregator(K))
@@ -1233,28 +1081,16 @@ object StreamingQueries {
         ord.as[(Long, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("month_sec", "o_custkey")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            // write-optimized staging append: one flat file per batch
-            // (~0.2 s) instead of a per-month-directory hive commit
-            // (~1.2 s/batch, and growing with index age) — the LSM
-            // ingest level compact() folds into the prunable layout
-            graft.operators.SketchIndex.appendStaged(
-              batch, "month_sec", "o_custkey", idx, K)
-            ()
-          }
-          .start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val (a, rest) = rows.splitAt(rows.length / 3)
+      val (b, c) = rest.splitAt(rest.length / 2)
+      feed[(Long, Long)](s)(in => eachBatch(in.toDF().toDF("month_sec", "o_custkey")) { batch =>
+        // write-optimized staging append: one flat file per batch
+        // (~0.2 s) instead of a per-month-directory hive commit
+        // (~1.2 s/batch, and growing with index age) — the LSM
+        // ingest level compact() folds into the prunable layout
+        graft.operators.SketchIndex.appendStaged(batch, "month_sec", "o_custkey", idx, K)
+      })(
+        _.addData(a), _.addData(b), _.addData(c))
 
       // the nightly COMPACTION pass a long-running stream needs
       // (VERDICT r9 ask #1): fold each month's accumulated partials
@@ -1295,7 +1131,6 @@ object StreamingQueries {
     // which must equal q63's batch answer — the same oracle shape.
     "st24_streaming_sharded_set" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val rows = graft.core.Scratch.cachedValue(s"st_type_ub_fixture_$d") {
         Tables.events(s, d)
@@ -1303,22 +1138,15 @@ object StreamingQueries {
           .as[(String, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = graft.operators.SaltedAgg.collectSetSharded(
+      val (a, rest) = rows.splitAt(rows.length / 3)
+      val (b, c) = rest.splitAt(rest.length / 2)
+      feed[(String, Long)](s)(in => memorySink(
+          graft.operators.SaltedAgg.collectSetSharded(
             in.toDF().toDF("event_type", "uid_bucket"),
             Seq("event_type"), "uid_bucket",
-            shardExpr = pmod(col("uid_bucket"), lit(4)), out = "uniq")
-          .writeStream.format("memory").queryName("st24_sharded")
-          .outputMode("complete").start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+            shardExpr = pmod(col("uid_bucket"), lit(4)), out = "uniq"),
+          "st24_sharded", "complete"))(
+        _.addData(a), _.addData(b), _.addData(c))
 
       s.table("st24_sharded")
         .withColumnRenamed("__shard", "shard")
@@ -1341,7 +1169,6 @@ object StreamingQueries {
     // streamed table must reproduce q69's oracle answer exactly.
     "st25_streaming_zonemap" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.operators.ZoneMap
       import graft.operators.ZoneMap.Range
       val root = graft.core.Scratch.dir("graft_zonemap_stream")
@@ -1354,33 +1181,23 @@ object StreamingQueries {
           .as[(Long, Long, String, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("l_partkey", "l_suppkey", "l_returnflag", "qty")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val before = ZoneMap.dataFiles(s, table).toSet
-            batch.repartitionByRange(2, col("l_partkey"))
-              .sortWithinPartitions("l_partkey")
-              .write.mode("append").parquet(table)
-            val landed = ZoneMap.dataFiles(s, table).filterNot(before)
-            ZoneMap.appendStats(s, landed, Seq("l_partkey", "l_suppkey"), zm)
-            ()
-          }
-          .start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          // the nightly pass while the stream is quiescent: fold the
-          // per-batch stats files to one (per-file facts — a pure
-          // rewrite); the third batch appends AFTER compaction, so
-          // the probe reads the compacted ∪ appended map
-          ZoneMap.compactStats(s, zm)
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val (a, rest) = rows.splitAt(rows.length / 3)
+      val (b, c) = rest.splitAt(rest.length / 2)
+      feed[(Long, Long, String, Long)](s)(in => eachBatch(
+          in.toDF().toDF("l_partkey", "l_suppkey", "l_returnflag", "qty")) { batch =>
+        val before = ZoneMap.dataFiles(s, table).toSet
+        batch.repartitionByRange(2, col("l_partkey"))
+          .sortWithinPartitions("l_partkey")
+          .write.mode("append").parquet(table)
+        val landed = ZoneMap.dataFiles(s, table).filterNot(before)
+        ZoneMap.appendStats(s, landed, Seq("l_partkey", "l_suppkey"), zm)
+      })(
+        _.addData(a), _.addData(b),
+        // the nightly pass while the stream is quiescent: fold the
+        // per-batch stats files to one (per-file facts — a pure
+        // rewrite); the third batch appends AFTER compaction, so
+        // the probe reads the compacted ∪ appended map
+        in => { ZoneMap.compactStats(s, zm); in.addData(c) })
 
       val box = Seq(Range("l_partkey", 10, 400), Range("l_suppkey", 1, 40))
       ZoneMap.readPruned(s, table, zm, box)
@@ -1401,7 +1218,6 @@ object StreamingQueries {
     // output.
     "st26_streaming_asof_join" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.streaming.{TemporalJoin, TemporalRow}
 
       val probes = graft.core.Scratch.cachedValue(s"st_ev_uid_fixture_$d") {
@@ -1422,21 +1238,12 @@ object StreamingQueries {
       val mid = (rows.map(_.sec).min + rows.map(_.sec).max) / 2
       val far = rows.map(_.sec).max + 1000000L
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TemporalRow]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = TemporalJoin.join(in.toDF(), watermarkDelaySec = 1)
-          .writeStream.format("memory").queryName("st26_matches")
-          .outputMode("append").start()
-        try {
-          val (b1, b2) = rows.partition(_.sec < mid)
-          in.addData(b1); q.processAllAvailable()
-          in.addData(b2); q.processAllAvailable()
-          in.addData(TemporalRow(-1L, is_dim = true, -1L, far))
-          q.processAllAvailable()
-          in.addData(TemporalRow(-1L, is_dim = true, -2L, far + 10))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val (b1, b2) = rows.partition(_.sec < mid)
+      feed[TemporalRow](s)(in => memorySink(
+          TemporalJoin.join(in.toDF(), watermarkDelaySec = 1), "st26_matches"))(
+        _.addData(b1), _.addData(b2),
+        _.addData(TemporalRow(-1L, is_dim = true, -1L, far)),
+        _.addData(TemporalRow(-1L, is_dim = true, -2L, far + 10)))
 
       s.table("st26_matches")
         .select(col("event_id"), col("user_id"), col("evt_sec"),
@@ -1458,7 +1265,6 @@ object StreamingQueries {
     // each side, null emission driven entirely by watermark passage.
     "st27_stream_stream_full_outer" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
       val ev = graft.core.Scratch.cachedValue(s"st_ev_uid_fixture_$d") {
         Tables.events(s, d)
@@ -1470,32 +1276,23 @@ object StreamingQueries {
       val sentinelL = (-2L, -1L, tmax + 100L * 3600L)
       val sentinelR = (-3L, -1L, tmax + 100L * 3600L)
 
-      val inL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      val inR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
+      feedPair[(Long, Long, Long)](s) { (inL, inR) =>
         val l = inL.toDF().toDF("l_event", "l_user", "l_sec")
           .withColumn("l_ts", timestamp_seconds(col("l_sec")))
           .withWatermark("l_ts", "10 seconds")
         val r = inR.toDF().toDF("r_event", "r_user", "r_sec")
           .withColumn("r_ts", timestamp_seconds(col("r_sec")))
           .withWatermark("r_ts", "10 seconds")
-        val q = l.join(r,
+        memorySink(l.join(r,
             col("l_user") === col("r_user") &&
               col("r_ts") > col("l_ts") &&
               col("r_ts") <= col("l_ts") + expr("INTERVAL 1 HOUR"),
             "full_outer")
-          .select("l_event", "l_user", "l_sec", "r_event", "r_user", "r_sec")
-          .writeStream.format("memory").queryName("st27_matches")
-          .outputMode("append").start()
-        try {
-          inL.addData(evens); inR.addData(odds)
-          q.processAllAvailable()
-          inL.addData(sentinelL); inR.addData(sentinelR)
-          q.processAllAvailable()
-          inL.addData(sentinelL); inR.addData(sentinelR)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+          .select("l_event", "l_user", "l_sec", "r_event", "r_user", "r_sec"), "st27_matches")
+      }(
+        (inL, inR) => { inL.addData(evens); inR.addData(odds) },
+        (inL, inR) => { inL.addData(sentinelL); inR.addData(sentinelR) },
+        (inL, inR) => { inL.addData(sentinelL); inR.addData(sentinelR) })
 
       s.table("st27_matches")
         .filter((col("l_event").isNull || col("l_event") >= 0) &&
@@ -1518,7 +1315,6 @@ object StreamingQueries {
     // must reproduce q71's oracle answer exactly.
     "st28_streaming_bloom" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.operators.{FileBloom, ZoneMap}
       val root = graft.core.Scratch.dir("graft_bloom_stream")
       val table = s"$root/t"
@@ -1530,31 +1326,21 @@ object StreamingQueries {
           .as[(Long, String, String, String, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, String, String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val before = ZoneMap.dataFiles(s, table).toSet
-            batch.repartition(2, col("text")) // unclustered landing
-              .write.mode("append").parquet(table)
-            val landed = ZoneMap.dataFiles(s, table).filterNot(before)
-            FileBloom.appendStats(s, landed, "doc_id", bm, m = 8192, k = 4)
-            ()
-          }
-          .start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          // the nightly pass while the stream is quiescent; the third
-          // batch appends AFTER compaction, so the probe reads the
-          // compacted ∪ appended index
-          FileBloom.compactStats(s, bm)
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val (a, rest) = rows.splitAt(rows.length / 3)
+      val (b, c) = rest.splitAt(rest.length / 2)
+      feed[(Long, String, String, String, Long)](s)(in => eachBatch(
+          in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")) { batch =>
+        val before = ZoneMap.dataFiles(s, table).toSet
+        batch.repartition(2, col("text")) // unclustered landing
+          .write.mode("append").parquet(table)
+        val landed = ZoneMap.dataFiles(s, table).filterNot(before)
+        FileBloom.appendStats(s, landed, "doc_id", bm, m = 8192, k = 4)
+      })(
+        _.addData(a), _.addData(b),
+        // the nightly pass while the stream is quiescent; the third
+        // batch appends AFTER compaction, so the probe reads the
+        // compacted ∪ appended index
+        in => { FileBloom.compactStats(s, bm); in.addData(c) })
 
       FileBloom.readPruned(s, table, bm, "doc_id",
           Seq(lit(7L), lit(233L), lit(481L)))
@@ -1579,7 +1365,6 @@ object StreamingQueries {
     // FULL-corpus transitive closure — x88's oracle verbatim.
     "st29_streaming_clusters" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.llm.Dedup
 
       // the old-corpus cluster state (labels + the signature-distinct
@@ -1604,53 +1389,41 @@ object StreamingQueries {
           .as[(Long, String)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, _: Long) =>
-            // ONE text→signature pass per batch: the probe, the
-            // internal candidates, and the distinct-index fold all
-            // consume the same checkpointed (doc_id, sig) frame via
-            // the FromSigs verbs — the round-16 sig-reuse rule; the
-            // old shape re-ran the minhash kernel (split+shingle+md5
-            // ×24) three times per batch, and at real batch sizes the
-            // kernel IS the batch's compute. Values are unchanged
-            // (bandIndex ≡ bandIndexFromSigs∘docSigs by definition).
-            val batchSigs = Dedup.docSigs(batch0, "text", "doc_id")
-              .localCheckpoint(true)
-            val delta = Dedup.incrementalCandidatesFromSigs(batchSigs,
-                index, "doc_id")
-              .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"))
-              .unionByName(Dedup.candidatesFromSigs(batchSigs, "doc_id",
-                  materialize = false, assumeUnique = true)
-                .select("doc_a", "doc_b"))
-            // materialize = false: `labels` is the parquet fixture on
-            // the first batch and this loop's own checkpoint after —
-            // the fold must not re-write the label table a second time
-            labels = Dedup.incrementalComponents(labels, delta,
-              "doc_a", "doc_b", materialize = false).localCheckpoint(true)
-            // foldIndexDistinct, not a plain union (ADVICE r13): a
-            // recurring signature must not gain one rep row per batch
-            // over the stream's life — the fold keeps the existing
-            // representative (connectivity identical; the probe above
-            // already edge-connected this batch's copy to it)
-            index = Dedup.foldIndexDistinct(index,
-                Dedup.bandIndexDistinctFromSigs(batchSigs, "doc_id"), "doc_id")
-              .localCheckpoint(true)
-            ()
-          }
-          .start()
-        try {
-          // the split puts same-signature duplicates in DIFFERENT
-          // batches, so the accumulating index is load-bearing
-          val (a, b) = newDocs.partition(_._1 % 20 == 0)
-          in.addData(a)
-          q.processAllAvailable()
-          in.addData(b)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      // the split puts same-signature duplicates in DIFFERENT
+      // batches, so the accumulating index is load-bearing
+      val (a, b) = newDocs.partition(_._1 % 20 == 0)
+      feed[(Long, String)](s)(in => eachBatch(in.toDF().toDF("doc_id", "text")) { batch0 =>
+        // ONE text→signature pass per batch: the probe, the
+        // internal candidates, and the distinct-index fold all
+        // consume the same checkpointed (doc_id, sig) frame via
+        // the FromSigs verbs — the round-16 sig-reuse rule; the
+        // old shape re-ran the minhash kernel (split+shingle+md5
+        // ×24) three times per batch, and at real batch sizes the
+        // kernel IS the batch's compute. Values are unchanged
+        // (bandIndex ≡ bandIndexFromSigs∘docSigs by definition).
+        val batchSigs = Dedup.docSigs(batch0, "text", "doc_id")
+          .localCheckpoint(true)
+        val delta = Dedup.incrementalCandidatesFromSigs(batchSigs,
+            index, "doc_id")
+          .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"))
+          .unionByName(Dedup.candidatesFromSigs(batchSigs, "doc_id",
+              materialize = false, assumeUnique = true)
+            .select("doc_a", "doc_b"))
+        // materialize = false: `labels` is the parquet fixture on
+        // the first batch and this loop's own checkpoint after —
+        // the fold must not re-write the label table a second time
+        labels = Dedup.incrementalComponents(labels, delta,
+          "doc_a", "doc_b", materialize = false).localCheckpoint(true)
+        // foldIndexDistinct, not a plain union (ADVICE r13): a
+        // recurring signature must not gain one rep row per batch
+        // over the stream's life — the fold keeps the existing
+        // representative (connectivity identical; the probe above
+        // already edge-connected this batch's copy to it)
+        index = Dedup.foldIndexDistinct(index,
+            Dedup.bandIndexDistinctFromSigs(batchSigs, "doc_id"), "doc_id")
+          .localCheckpoint(true)
+      })(
+        _.addData(a), _.addData(b))
 
       labels.select(col("node").as("doc_id"), col("label").as("cluster_rep"))
         .orderBy("doc_id")
@@ -1679,7 +1452,6 @@ object StreamingQueries {
     // land on exactly the from-scratch clusters of what remains.
     "st30_streaming_add_delete" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.llm.Dedup
 
       val root = graft.core.Scratch.cachedDir(s"st30_state_$d") { r =>
@@ -1710,7 +1482,7 @@ object StreamingQueries {
       // tombstone-of-absent edge; they land live via the second add)
       // — the final live set is unchanged, so the oracle predicate is
       // the same as before ADVICE r14's fix
-      val feed = graft.core.Scratch.cachedValue(s"st30_feed_fixture_$d") {
+      val batches = graft.core.Scratch.cachedValue(s"st30_feed_fixture_$d") {
         val docs = Tables.documents(s, d).select("doc_id", "text")
           .as[(Long, String)].collect()
         val a1 = docs.filter(_._1 % 20 == 0).map { case (i, t) => ("add", i, t) }
@@ -1720,71 +1492,61 @@ object StreamingQueries {
         Seq(a1.toSeq, del.toSeq, a2.toSeq)
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("op", "doc_id", "text")
-          .writeStream
-          .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, _: Long) =>
-            val batch = batch0.localCheckpoint(true)
-            val adds = batch.filter(col("op") === "add").select("doc_id", "text")
-            val dels = batch.filter(col("op") === "del").select("doc_id")
-            // one aggregation decides both arms (the two isEmpty probes
-            // were two jobs per batch on the hot maintenance path)
-            val ops = batch.groupBy("op").count().collect()
-              .map(r => r.getString(0)).toSet
-            if (ops("add")) {
-              // ONE text→signature pass per add batch (the st29
-              // sig-reuse rule): probe, internal candidates, the sigs
-              // sidecar fold and the distinct-index fold all read the
-              // same checkpointed (doc_id, sig) frame — the old shape
-              // ran the minhash kernel four times per batch
-              val addSigs = Dedup.docSigs(adds, "text", "doc_id")
-                .localCheckpoint(true)
-              val delta = Dedup.incrementalCandidatesFromSigs(addSigs,
-                  index, "doc_id")
-                .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"))
-                .unionByName(Dedup.candidatesFromSigs(addSigs, "doc_id",
-                    materialize = false, assumeUnique = true)
-                  .select("doc_a", "doc_b"))
-              // fold against the store's view and write back ONLY the
-              // changed rows + dropped labels — the delta producer
-              // (incrementalComponentsDelta) emits them directly from
-              // its own remap, so the full post-fold table is never
-              // materialized or diffed; read() reconstructs it lazily
-              val (chg, dropped) = Dedup.incrementalComponentsDelta(
-                graft.llm.LabelStore.read(s, store), delta,
-                "doc_a", "doc_b", materialize = false)
-              graft.llm.LabelStore.appendDelta(s, store, chg, dropped)
-              sigs = sigs.unionByName(addSigs)
-                .localCheckpoint(true)
-              index = Dedup.foldIndexDistinct(index,
-                  Dedup.bandIndexDistinctFromSigs(addSigs, "doc_id"), "doc_id")
-                .localCheckpoint(true)
-            }
-            if (ops("del")) {
-              // the SCOPED deletion verb (VERDICT r14 ask #1), owned
-              // by the store since round 16: appendDelete recomputes
-              // only components containing a tombstone from the
-              // retained sigs (splits handled by construction; no
-              // text re-shingled) and appends the delta + drop set —
-              // O(touched) writes; untouched labels pass through at
-              // read time. The distinct index still re-elects reps
-              // only in sig groups whose kept representative died.
-              graft.llm.LabelStore.appendDelete(s, store, sigs, dels,
-                "doc_id")
-              index = Dedup.deleteFromIndexDistinct(index, sigs, dels,
-                  "doc_id")
-                .localCheckpoint(true)
-              sigs = sigs.join(dels, Seq("doc_id"), "left_anti")
-                .localCheckpoint(true)
-            }
-            ()
-          }
-          .start()
-        try {
-          feed.foreach { b => in.addData(b); q.processAllAvailable() }
-        } finally q.stop()
-      }
+      feed[(String, Long, String)](s)(in => eachBatch(in.toDF().toDF("op", "doc_id", "text")) { batch0 =>
+        val batch = batch0.localCheckpoint(true)
+        val adds = batch.filter(col("op") === "add").select("doc_id", "text")
+        val dels = batch.filter(col("op") === "del").select("doc_id")
+        // one aggregation decides both arms (the two isEmpty probes
+        // were two jobs per batch on the hot maintenance path)
+        val ops = batch.groupBy("op").count().collect()
+          .map(r => r.getString(0)).toSet
+        if (ops("add")) {
+          // ONE text→signature pass per add batch (the st29
+          // sig-reuse rule): probe, internal candidates, the sigs
+          // sidecar fold and the distinct-index fold all read the
+          // same checkpointed (doc_id, sig) frame — the old shape
+          // ran the minhash kernel four times per batch
+          val addSigs = Dedup.docSigs(adds, "text", "doc_id")
+            .localCheckpoint(true)
+          val delta = Dedup.incrementalCandidatesFromSigs(addSigs,
+              index, "doc_id")
+            .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"))
+            .unionByName(Dedup.candidatesFromSigs(addSigs, "doc_id",
+                materialize = false, assumeUnique = true)
+              .select("doc_a", "doc_b"))
+          // fold against the store's view and write back ONLY the
+          // changed rows + dropped labels — the delta producer
+          // (incrementalComponentsDelta) emits them directly from
+          // its own remap, so the full post-fold table is never
+          // materialized or diffed; read() reconstructs it lazily
+          val (chg, dropped) = Dedup.incrementalComponentsDelta(
+            graft.llm.LabelStore.read(s, store), delta,
+            "doc_a", "doc_b", materialize = false)
+          graft.llm.LabelStore.appendDelta(s, store, chg, dropped)
+          sigs = sigs.unionByName(addSigs)
+            .localCheckpoint(true)
+          index = Dedup.foldIndexDistinct(index,
+              Dedup.bandIndexDistinctFromSigs(addSigs, "doc_id"), "doc_id")
+            .localCheckpoint(true)
+        }
+        if (ops("del")) {
+          // the SCOPED deletion verb (VERDICT r14 ask #1), owned
+          // by the store since round 16: appendDelete recomputes
+          // only components containing a tombstone from the
+          // retained sigs (splits handled by construction; no
+          // text re-shingled) and appends the delta + drop set —
+          // O(touched) writes; untouched labels pass through at
+          // read time. The distinct index still re-elects reps
+          // only in sig groups whose kept representative died.
+          graft.llm.LabelStore.appendDelete(s, store, sigs, dels,
+            "doc_id")
+          index = Dedup.deleteFromIndexDistinct(index, sigs, dels,
+              "doc_id")
+            .localCheckpoint(true)
+          sigs = sigs.join(dels, Seq("doc_id"), "left_anti")
+            .localCheckpoint(true)
+        }
+      })(addEach(batches): _*)
 
       graft.llm.LabelStore.read(s, store)
         .select(col("node").as("doc_id"), col("label").as("cluster_rep"))
@@ -1806,7 +1568,6 @@ object StreamingQueries {
     // every earlier id). Same banding-free brute-force oracle as x91.
     "st31_streaming_perceptual_index" -> ((s, d) => {
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.llm.Multimodal
       // fresh per invocation — the stream APPENDS to the on-disk
       // index, so a cached fixture would accumulate duplicate rows
@@ -1822,7 +1583,7 @@ object StreamingQueries {
       // the re-ingest feed, exactly x91's corpus arithmetic: 2×
       // nearest-neighbor upscales (+1M) and one corrupted sample per
       // 5th asset (+2M, the splice at 1-D sample 30's position)
-      val feed = graft.core.Scratch.cachedValue(s"st31_feed_fixture_$d") {
+      val batches = graft.core.Scratch.cachedValue(s"st31_feed_fixture_$d") {
         val base = Tables.documents(s, d).select("doc_id", "text")
           .as[(Long, String)].collect().toSeq
         def upscale(t: String): Array[Byte] = {
@@ -1841,21 +1602,12 @@ object StreamingQueries {
         Seq(rend, corr)
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Byte])]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "media")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val before = graft.operators.ZoneMap.dataFiles(s, table).toSet
-            batch.select("doc_id", "media").write.mode("append").parquet(table)
-            idx.append(s,
-              graft.operators.ZoneMap.dataFiles(s, table).filterNot(before))
-            ()
-          }
-          .start()
-        try feed.foreach { b => in.addData(b); q.processAllAvailable() }
-        finally q.stop()
-      }
+      feed[(Long, Array[Byte])](s)(in => eachBatch(in.toDF().toDF("doc_id", "media")) { batch =>
+        val before = graft.operators.ZoneMap.dataFiles(s, table).toSet
+        batch.select("doc_id", "media").write.mode("append").parquet(table)
+        idx.append(s,
+          graft.operators.ZoneMap.dataFiles(s, table).filterNot(before))
+      })(addEach(batches): _*)
 
       idx.pairs(s).orderBy("doc_a", "doc_b")
     })

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, EqualTo, Expression, In, InSet, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.graftshim.GraftSqlShims
+import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 
 /** Planning-time BLOOM file skipping — [[graft.operators.FileBloom]]'s
@@ -130,7 +130,7 @@ final class BloomFileIndex(spark: SparkSession, tablePath: String,
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val keySets = BloomFileIndex.extractKeySets(dataFilters, column)
     val posSets: Seq[Seq[Seq[Int]]] = keySets.map(_.map(l =>
-      graft.operators.FileBloom.positionsOf(GraftSqlShims.toColumn(l), m, k)))
+      graft.operators.FileBloom.positionsOf(GraftSqlBridge.toColumn(l), m, k)))
     val listed = base.listFiles(partitionFilters, dataFilters)
     val pruned =
       if (posSets.isEmpty) listed

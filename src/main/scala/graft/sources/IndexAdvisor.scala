@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.graftshim.GraftSqlShims
+import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.types.StructType
 
 /** Mount a table with EVERY persisted skipping index it has — the
@@ -212,7 +212,7 @@ object IndexAdvisor {
     * resolution — the shape the advisor selects layers by.
     */
   private def referenced(pred: Column): Set[String] =
-    GraftSqlShims.toExpression(pred).collect {
+    GraftSqlBridge.toExpression(pred).collect {
       case a: UnresolvedAttribute => a.name.toLowerCase
       case a: AttributeReference => a.name.toLowerCase
     }.toSet

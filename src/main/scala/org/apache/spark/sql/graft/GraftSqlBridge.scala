@@ -1,16 +1,26 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedAggregator}
 
-/** Minimal bridge into the `org.apache.spark.sql` package-private API:
-  * wraps a custom [[LogicalPlan]] into a DataFrame so library operators
-  * (graft.plans.AsOfJoinPlan) can enter the session's analyzer /
-  * optimizer / planner like any built-in node. This factory-in-subpackage
-  * shape is the standard pattern public Spark extensions use to build
-  * Datasets from custom plans; it is the ONLY place the library steps
-  * inside Spark's package namespace.
+/** The library's one bridge into `private[sql]` Spark API: the object
+  * lives under the `org.apache.spark.sql` package namespace solely to
+  * satisfy the access modifiers, and it contains no Spark code (the
+  * standard extension-library shim pattern). It is the only package
+  * the library places inside Spark's namespace. It covers:
+  *   - building a DataFrame from a custom [[LogicalPlan]], so library
+  *     operators (graft.plans.AsOfJoinPlan) enter the session's
+  *     analyzer / optimizer / planner like any built-in node;
+  *   - converting between Column and Catalyst expression, and wrapping
+  *     a typed Aggregator as an aggregate expression, for the SQL
+  *     function registry (graft.functions.SketchSqlFunctions) and the
+  *     file-skipping indexes;
+  *   - probing the session's CacheManager for leaked cache entries.
   */
 object GraftSqlBridge {
 
@@ -25,4 +35,29 @@ object GraftSqlBridge {
     */
   def cacheManagerIsEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
+
+  /** Column view of a Catalyst expression (function-builder input). */
+  def toColumn(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** Catalyst expression of a Column (function-builder output). The
+    * EAGER default converter, not ExpressionUtils' lazy wrapper — a
+    * function builder's output is spliced into a plan mid-analysis,
+    * where a deferred ColumnNode wrapper would survive to execution
+    * as an Unevaluable node.
+    */
+  def toExpression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
+
+  /** The aggregate-function expression for a typed Aggregator — what
+    * the analyzer wraps into an AggregateExpression when the builder
+    * returns it (same path as session-level udaf registration, but
+    * session-independent, at extension-injection time).
+    */
+  def aggregatorExpression[IN, BUF, OUT](
+      name: String,
+      agg: Aggregator[IN, BUF, OUT],
+      inputEncoder: Encoder[IN],
+      children: Seq[Expression]): Expression =
+    ScalaAggregator(
+      UserDefinedAggregator(agg, inputEncoder, givenName = Some(name)),
+      children.toIndexedSeq)
 }
