@@ -186,46 +186,62 @@ object SpikeDetector {
     ipSpikes.union(netSpikes.withColumnRenamed("dst_net", "dst_ip"))
   }
 
-  /** Same answers as [[detect]], better plan: ONE scan + ONE shuffle.
-    *
-    * Both window averages come from a single conditional aggregation
-    * (`avg(when(pred, CountPkt))` — avg ignores the nulls, so each
-    * side averages exactly the rows its window predicate admits), and
-    * the reference's 3-key left self-join collapses into a filter on
-    * `cur IS NOT NULL`: a key appears on the left of that join iff it
-    * has current-window rows, with prev NULL iff it has none — the
-    * exact frame the join produced. The /24 branches re-aggregate the
-    * fused frame (null-ignoring avg again = per-window membership).
-    *
-    * At 100 TB this is the difference between 4 fact scans + 2 agg
-    * shuffles + a join (or 2 scans + cache with [[detect]]'s
-    * materialize) and one scan + one shuffle + small re-aggs —
-    * equivalence is oracle-checked (r08) and property-tested against
-    * [[detect]].
+  private val PartialCols = Seq("cur_sum", "cur_cnt", "prev_sum", "prev_cnt")
+
+  /** Row-level window partials: every row that falls in either window,
+    * as its key plus its contribution to each window's exact Σ CountPkt
+    * (`cur_sum`, `prev_sum`: the value, or null outside the window) and
+    * count of non-null CountPkt (`cur_cnt`, `prev_cnt`: 1 or 0). The
+    * schema equals [[windowPartials]]'s, so [[mergePartials]] folds row-
+    * and key-level frames alike.
     */
-  def detectFused(
-      hist: DataFrame,
-      currentPredicate: Column,
-      previousPredicate: Column,
-      params: SpikeParams = SpikeParams()
-  ): DataFrame = {
-    // exact sum/count partials ride along only when the weighted
-    // roll-up is on — same single shuffle either way
-    val baseAggs = Seq(
-      avg(when(currentPredicate, col("CountPkt"))).cast("int").as("sum_val"),
-      avg(when(previousPredicate, col("CountPkt"))).cast("int").as("prev_sum_val"))
-    val weightAggs =
-      if (params.weightedNetRollup) Seq(
-        sum(when(currentPredicate, col("CountPkt"))).as("cur_sum"),
-        count(when(currentPredicate, col("CountPkt"))).as("cur_cnt"),
-        sum(when(previousPredicate, col("CountPkt"))).as("prev_sum"),
-        count(when(previousPredicate, col("CountPkt"))).as("prev_cnt"))
-      else Nil
-    val allAggs = baseAggs ++ weightAggs
-    val fused = hist
+  def rowPartials(hist: DataFrame, currentPredicate: Column, previousPredicate: Column): DataFrame = {
+    val cur = when(currentPredicate, col("CountPkt"))
+    val prev = when(previousPredicate, col("CountPkt"))
+    hist
       .filter(currentPredicate || previousPredicate)
+      .select(col("num_protocol"), col("type_proto"), col("dst_ip"),
+        cur.as("cur_sum"), cur.isNotNull.cast("long").as("cur_cnt"),
+        prev.as("prev_sum"), prev.isNotNull.cast("long").as("prev_cnt"))
+  }
+
+  /** Merge partial frames of disjoint row sets: plain per-key sums.
+    * A window's Σ stays null iff its count is 0, so merged frames obey
+    * the same invariant as their inputs.
+    */
+  def mergePartials(parts: DataFrame*): DataFrame = {
+    val aggs = PartialCols.map(c => sum(c).as(c))
+    parts.reduce(_ union _)
       .groupBy((KeyCols :+ "dst_ip").map(col): _*)
-      .agg(allAggs.head, allAggs.tail: _*)
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Exact per-key window partials (the numerators and denominators of
+    * hha.py:143,149 before the average): one row per
+    * (num_protocol, type_proto, dst_ip) with a row in either window,
+    * carrying `cur_sum`, `cur_cnt`, `prev_sum`, `prev_cnt` as longs.
+    */
+  def windowPartials(hist: DataFrame, currentPredicate: Column, previousPredicate: Column): DataFrame =
+    mergePartials(rowPartials(hist, currentPredicate, previousPredicate))
+
+  /** The spike semantics over exact partials: truncating averages
+    * `(Σ/count).cast(int)` per window (null for an empty window — the
+    * value `avg` gives, bit for bit while |Σ| < 2^53), the reference's
+    * left self-join as a filter on `cur IS NOT NULL` (a key is on the
+    * left of that join iff it has current-window rows, with prev NULL
+    * iff it has none), the baseline clamp and the /24 roll-up, then the
+    * positional union of the per-IP and per-net branches.
+    *
+    * Any frame of [[windowPartials]]' schema works, so partials merged
+    * from separately scanned files (see `graft.app.SpikeScheduler`)
+    * alert exactly like one scan over all of them.
+    */
+  def fromPartials(partials: DataFrame, params: SpikeParams = SpikeParams()): DataFrame = {
+    def truncAvg(s: Column, n: Column): Column = when(n > 0, (s / n).cast("int"))
+    val fused = partials.select(col("num_protocol"), col("type_proto"), col("dst_ip"),
+      truncAvg(col("cur_sum"), col("cur_cnt")).as("sum_val"),
+      truncAvg(col("prev_sum"), col("prev_cnt")).as("prev_sum_val"),
+      col("cur_sum"), col("cur_cnt"), col("prev_sum"), col("prev_cnt"))
 
     def clampAndSpike(df: DataFrame, keyCol: String, limit: Int,
                       requirePrevAboveLimit: Boolean): DataFrame = {
@@ -259,8 +275,8 @@ object SpikeDetector {
         .groupBy((KeyCols :+ "dst_net").map(col): _*)
       if (params.weightedNetRollup)
         keyed.agg(
-          (sum("cur_sum") / sum("cur_cnt")).cast("int").as("sum_val"),
-          (sum("prev_sum") / sum("prev_cnt")).cast("int").as("prev_sum_val"))
+          truncAvg(sum("cur_sum"), sum("cur_cnt")).as("sum_val"),
+          truncAvg(sum("prev_sum"), sum("prev_cnt")).as("prev_sum_val"))
       else
         keyed.agg(
           avg("sum_val").cast("int").as("sum_val"),
@@ -271,4 +287,28 @@ object SpikeDetector {
       .union(clampAndSpike(fusedNet, "dst_net", params.limitNewDataNet,
         requirePrevAboveLimit = false).withColumnRenamed("dst_net", "dst_ip"))
   }
+
+  /** Same answers as [[detect]], better plan: ONE scan + ONE shuffle —
+    * `fromPartials(windowPartials(hist, ...))`.
+    *
+    * Both windows' exact Σ and count come from a single conditional
+    * aggregation (`sum`/`count` of `when(pred, CountPkt)`, so each side
+    * covers exactly the rows its window predicate admits), and the
+    * reference's 3-key left self-join collapses into a filter on
+    * `cur IS NOT NULL` (see [[fromPartials]]). The /24 branches
+    * re-aggregate the fused frame.
+    *
+    * At 100 TB this is the difference between 4 fact scans + 2 agg
+    * shuffles + a join (or 2 scans + cache with [[detect]]'s
+    * materialize) and one scan + one shuffle + small re-aggs —
+    * equivalence is oracle-checked (r08) and property-tested against
+    * [[detect]].
+    */
+  def detectFused(
+      hist: DataFrame,
+      currentPredicate: Column,
+      previousPredicate: Column,
+      params: SpikeParams = SpikeParams()
+  ): DataFrame =
+    fromPartials(windowPartials(hist, currentPredicate, previousPredicate), params)
 }
